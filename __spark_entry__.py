@@ -1372,7 +1372,12 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT doc_id,
                    regexp_replace(
-                     regexp_replace(u2, ':(?:80|443)([/?]|$)', '\1'),
+                     regexp_replace(
+                       regexp_replace(u2,
+                         '^(http://(?:[^/@?#]*@)?[^/:?#]+):80([/?]|$)',
+                         '\1\2'),
+                       '^(https://(?:[^/@?#]*@)?[^/:?#]+):443([/?]|$)',
+                       '\1\2'),
                      '/$', '') AS norm_url,
                    host
             FROM s2

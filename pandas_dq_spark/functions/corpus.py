@@ -16,8 +16,12 @@ Scale design:
   stratum column — no per-stratum jobs, no ``sampleBy`` (whose
   per-partition RNG has the same reproducibility problem).
 - Chunking is pure Catalyst (split -> sequence -> slice ->
-  posexplode): one narrow pass, output rows carry (url, chunk_id)
-  so downstream shuffles can key on them.
+  posexplode), narrow, with no shuffle.  Each document is split into
+  words once, into a column, and each window is sliced once: chunk
+  text and word count both read that slice, so the optimized plan
+  holds one ``split`` (inlined into one expression, the split would
+  run again per CASE branch, per window and per output row).  Output
+  rows carry (url, chunk_id) so downstream shuffles can key on them.
 - TF-IDF is two map-side-combinable aggregations over one explode —
   the classic term-statistics shape; the explode never leaves the
   scan stage and only (term, counts) rows shuffle.
@@ -109,43 +113,38 @@ def chunk_documents(
             f"need 0 <= overlap ({overlap_words}) < chunk ({chunk_words})"
         )
     step = chunk_words - overlap_words
-    w = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
-        lambda t: t != "",
+    # the word array is a column, referenced below as an attribute,
+    # so the text is not split again per CASE branch, per window or
+    # per output row
+    words = df.select(
+        *[F.col(c) for c in id_cols],
+        F.filter(
+            F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
+            lambda t: t != "",
+        ).alias("__w"),
     )
+    w = F.col("__w")
     n = F.size(w)
     # chunk starts: 0, step, 2*step, ... while start < n (last window
-    # may be short but never empty)
-    n_chunks = F.when(n <= 0, F.lit(0)).otherwise(
-        F.floor((n - 1) / F.lit(step)).cast("int") + 1
+    # may be short but never empty, and never CONTAINED in the previous
+    # one because starts advance by step > overlap).  sequence(0, -1)
+    # counts DOWN in Spark, so the empty-doc case must short-circuit
+    # to an empty array, not rely on an empty sequence
+    starts = F.when(n <= 0, F.array().cast("array<int>")).otherwise(
+        F.sequence(F.lit(0), F.floor((n - 1) / F.lit(step)).cast("int"))
     )
-    # a trailing chunk fully CONTAINED in the previous one (start >=
-    # n - overlap would duplicate content) cannot occur because starts
-    # advance by step > overlap while start < n
-    # sequence(0, -1) counts DOWN in Spark, so the empty-doc case must
-    # short-circuit to an empty array, not rely on an empty sequence
-    starts = F.when(
-        n_chunks <= 0, F.array().cast("array<int>")
-    ).otherwise(F.sequence(F.lit(0), n_chunks - 1))
-    chunks = F.transform(
-        starts,
-        lambda i: F.concat_ws(
-            " ", F.slice(w, i * step + 1, F.lit(chunk_words))
-        ),
+    windows = F.transform(
+        starts, lambda i: F.slice(w, i * step + 1, F.lit(chunk_words))
     )
-    out = df.select(
-        *[F.col(c) for c in id_cols],
-        n.alias("__n"),
-        F.posexplode(chunks).alias("chunk_id", "chunk_text"),
+    out = words.select(
+        *id_cols, F.posexplode(windows).alias("chunk_id", "__slice")
     )
-    n_in_chunk = F.least(
-        F.lit(chunk_words), F.col("__n") - F.col("chunk_id") * step
-    )
+    # each window is sliced once; text and word count both read it
     return out.select(
         *id_cols,
         "chunk_id",
-        "chunk_text",
-        n_in_chunk.cast("int").alias("chunk_n_words"),
+        F.concat_ws(" ", F.col("__slice")).alias("chunk_text"),
+        F.size("__slice").alias("chunk_n_words"),
     )
 
 
@@ -217,6 +216,7 @@ def pack_chunks(
     words_col: str = "chunk_n_words",
     id_cols: tuple[str, ...] = ("doc_id", "chunk_id"),
     n_buckets: int = 64,
+    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Greedy sequence packing: group chunks into training sequences
     whose word totals stay within ``budget_words`` — the
@@ -232,41 +232,43 @@ def pack_chunks(
     assignment and the in-bucket order are pure functions of the data.
     Oversized single chunks (> budget) get a sequence of their own.
 
-    Output: id columns + (pack_bucket, seq_id, seq_n_words), where
-    seq_id numbers sequences within a bucket."""
+    Output: id columns + ``carry_cols`` + (pack_bucket, seq_id,
+    seq_n_words), where seq_id numbers sequences within a bucket.
+    ``carry_cols`` (say the chunk text) ride through the pass unchanged,
+    so a caller that needs whole chunk rows does not join the packing
+    back onto ``chunks``: that join reads, and so computes, ``chunks``
+    a second time."""
     import pandas as pd
 
     key = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in id_cols])
     bucketed = chunks.withColumn(
         "pack_bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
     )
-    # id columns keep their INPUT types — any arity, any dtype
+    # id and carried columns keep their INPUT types — any arity, any dtype
     in_types = dict(chunks.dtypes)
     out_fields = ", ".join(
-        [f"{c} {in_types[c]}" for c in id_cols]
+        [f"{c} {in_types[c]}" for c in (*id_cols, *carry_cols)]
         + ["pack_bucket int", "seq_id int", "seq_n_words int"]
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(list(id_cols), kind="mergesort").reset_index(
-            drop=True
-        )
+        pdf = pdf.sort_values(list(id_cols), kind="mergesort")
         seq_ids, totals = [], []
-        seq, acc = 0, 0
-        for n in pdf[words_col]:
-            n = int(n)
+        acc = 0
+        for n in map(int, pdf[words_col].tolist()):
             if acc > 0 and acc + n > budget_words:
-                seq += 1
+                totals.append(acc)
                 acc = 0
             acc += n
-            seq_ids.append(seq)
-            totals.append(acc)
-        pdf = pdf.assign(seq_id=seq_ids)
+            seq_ids.append(len(totals))
+        totals.append(acc)
         # seq_n_words = final total of the sequence each row landed in
-        fin = pdf.assign(__t=totals).groupby("seq_id")["__t"].max()
-        pdf = pdf.assign(seq_n_words=pdf["seq_id"].map(fin))
-        return pdf[[*id_cols, "pack_bucket", "seq_id", "seq_n_words"]]
+        return pdf[[*id_cols, *carry_cols, "pack_bucket"]].assign(
+            seq_id=seq_ids, seq_n_words=[totals[s] for s in seq_ids]
+        )
 
-    return bucketed.select(*id_cols, "pack_bucket", words_col).groupBy(
-        "pack_bucket"
-    ).applyInPandas(pack, schema=out_fields)
+    cols = [*id_cols, *carry_cols, "pack_bucket"]
+    cols += [words_col] if words_col not in cols else []
+    return bucketed.select(*cols).groupBy("pack_bucket").applyInPandas(
+        pack, schema=out_fields
+    )

@@ -7,7 +7,21 @@ Each stage is optional and independently tested; this module only
 sequences them in the canonical order and threads the id/text columns
 through, so the composition inherits every stage's scale properties
 (narrow filters, broadcast joins, window-free aggregations,
-deterministic hash decisions)."""
+deterministic hash decisions).
+
+One materialisation point: the kept corpus (url, lang, text) is
+``localCheckpoint``-ed right after the quality filter, eagerly.  Line
+removal reads its input three times plus the join back, so without it
+the scan, the Arrow scores UDF and the dedup window would run several
+times per page.  Packing carries the chunk text and word count through
+its pass instead of being joined back onto the chunks, so line removal
+and chunking run once per call, not once per read of the chunk frame.  The checkpoint also cuts the lineage that the
+near-dedup stage's label propagation would otherwise drag along.  Its
+blocks are released by Spark's ContextCleaner once nothing references
+the returned frame, so there is no unpersist to call.  The trade-off:
+checkpoint blocks live only on the executors that computed them, so
+losing an executor fails the downstream jobs instead of recomputing
+the filter."""
 
 from __future__ import annotations
 
@@ -68,7 +82,11 @@ def prepare_training_corpus(
     if normalize_urls:
         df = df.withColumn("url", normalize_url(F.col("url")))
     scored = quality_filter(df, cfg, check_extraction=False)
-    kept = note("kept_docs", scored.filter("keep").select("url", "lang", "text"))
+    # the only scoring pass: every later read hits the checkpoint
+    kept = note(
+        "kept_docs",
+        scored.filter("keep").select("url", "lang", "text").localCheckpoint(),
+    )
 
     text_col = "text"
     if line_min_docs is not None:
@@ -103,10 +121,10 @@ def prepare_training_corpus(
         id_cols=("url", "lang"),
     )
     if pack_budget is not None:
-        packed = pack_chunks(
+        chunks = pack_chunks(
             chunks,
             budget_words=pack_budget,
             id_cols=("url", "lang", "chunk_id"),
-        )
-        chunks = chunks.join(packed, ["url", "lang", "chunk_id"])
+            carry_cols=("chunk_text", "chunk_n_words"),
+        ).select(*chunks.columns, "pack_bucket", "seq_id", "seq_n_words")
     return note("chunks", chunks)

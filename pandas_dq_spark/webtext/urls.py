@@ -27,7 +27,8 @@ def url_host(col: F.Column) -> F.Column:
 
 def normalize_url(col: F.Column) -> F.Column:
     """Canonical form: strip fragment, lowercase scheme + host, drop
-    default :80/:443 ports, drop a single trailing slash.
+    the scheme's default port (:80 for http, :443 for https), drop a
+    single trailing slash.
 
     Order matters and is part of the contract (the DuckDB oracle
     replays the same four regexp passes in the same order):
@@ -35,9 +36,12 @@ def normalize_url(col: F.Column) -> F.Column:
     1. ``#fragment`` removed.
     2. the ``scheme://host`` prefix lowercased IN PLACE (path, query
        and userinfo keep their case).
-    3. ``:80`` / ``:443`` dropped when followed by ``/``, ``?`` or
-       end-of-string (expressed with a captured delimiter, not
-       lookahead — RE2, DuckDB's engine, has no lookahead).
+    3. ``:80`` dropped from an ``http`` authority and ``:443`` from an
+       ``https`` one, when the port ends the authority (followed by
+       ``/``, ``?`` or end-of-string).  Anchored on the prefix, so a
+       default port number in the userinfo, path or query, or on
+       another scheme, is kept.  Written with captured groups, not
+       lookahead — RE2, DuckDB's engine, has no lookahead.
     4. one trailing ``/`` removed (``https://h/`` == ``https://h``).
     """
     u = F.regexp_replace(col, r"#.*$", "")
@@ -54,7 +58,10 @@ def normalize_url(col: F.Column) -> F.Column:
     u = F.when(
         F.regexp_extract(u, _SCHEME_HOST_RE, 2) != "", F.concat(prefix, rest)
     ).otherwise(u)
-    u = F.regexp_replace(u, r":(?:80|443)([/?]|$)", "$1")
+    for scheme, port in (("http", 80), ("https", 443)):
+        u = F.regexp_replace(
+            u, rf"^({scheme}://(?:[^/@?#]*@)?[^/:?#]+):{port}([/?]|$)", "$1$2"
+        )
     return F.regexp_replace(u, r"/$", "")
 
 

@@ -111,6 +111,16 @@ def test_chunk_documents_coverage_and_overlap(spark):
         chunk_documents(df, chunk_words=10, overlap_words=10)
 
 
+def test_chunk_documents_splits_each_document_once(spark):
+    # the word array is one column: CollapseProject must not inline it
+    # back into the CASE branches, the per-window lambda or the word
+    # count, each of which would split the whole text again
+    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    out = chunk_documents(df, chunk_words=40, overlap_words=10)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
+
+
 def test_term_stats_and_tfidf_match_python(spark):
     texts = [
         (0, "the cat sat on the mat"),
@@ -331,6 +341,33 @@ def test_pack_chunks_custom_id_cols(spark):
     rows_out = out.collect()
     assert len(rows_out) == len(rows)
     assert all(r["seq_n_words"] <= 120 for r in rows_out)
+
+
+def test_pack_chunks_carry_cols_match_join_back(spark):
+    """Carried columns come out as if the packing were joined back."""
+    from pandas_dq_spark.functions.corpus import pack_chunks
+
+    rows = [
+        (d, c, f"doc {d} chunk {c}", 1 + (d * 7 + c * 13) % 90)
+        for d in range(30) for c in range(4)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, chunk_id int, chunk_text string, chunk_n_words int"
+    )
+    carried = pack_chunks(
+        df, budget_words=128, n_buckets=8,
+        carry_cols=("chunk_text", "chunk_n_words"),
+    )
+    assert carried.columns == [
+        "doc_id", "chunk_id", "chunk_text", "chunk_n_words",
+        "pack_bucket", "seq_id", "seq_n_words",
+    ]
+    assert dict(carried.dtypes)["chunk_text"] == "string"
+    joined = df.join(
+        pack_chunks(df, budget_words=128, n_buckets=8), ["doc_id", "chunk_id"]
+    ).select(*carried.columns)
+    key = lambda r: (r["doc_id"], r["chunk_id"])
+    assert sorted(carried.collect(), key=key) == sorted(joined.collect(), key=key)
 
 
 def test_duplicate_ngram_fraction(spark):

@@ -88,3 +88,35 @@ def test_prepare_training_corpus_near_dedup_drops_copies(spark):
     # jittered copies cluster with their originals and drop
     assert sum(1 for u in urls if u.startswith("zzz://")) <= 3
     assert st["after_near_dedup"] <= st["kept_docs"]
+
+
+def test_prepare_training_corpus_scores_once(spark):
+    # the kept corpus is checkpointed after the quality filter, so the
+    # returned plan (line removal reads its input more than once) holds
+    # no scores UDF to run again
+    out = prepare_training_corpus(
+        pages_df(spark, 200),
+        QualityConfig(min_words=20),
+        line_min_docs=20,
+        chunk_words=64,
+        overlap_words=8,
+        pack_budget=192,
+    )
+    qe = out._jdf.queryExecution()
+    for plan in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+        assert "ArrowEvalPython" not in plan, plan
+
+
+def test_prepare_training_corpus_chunks_once(spark):
+    # packing carries the chunk columns through instead of being joined
+    # back onto the chunk frame, so the plan chunks each document once
+    out = prepare_training_corpus(
+        pages_df(spark, 200),
+        QualityConfig(min_words=20),
+        line_min_docs=20,
+        chunk_words=64,
+        overlap_words=8,
+        pack_budget=192,
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("posexplode(transform(") == 1, plan
