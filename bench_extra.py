@@ -4,7 +4,8 @@ FROZEN bench.py.  Times individual stages of the flagship pipeline and
 the heavy queries so optimizations target the real cost.
 
 Usage: python bench_extra.py [flagship|queries|all] [reps]
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPLICAS.
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the cores this process
+may run on), SPARK_GRAFT_BENCH_REPLICAS.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 MODE = sys.argv[1] if len(sys.argv) > 1 else "all"
 REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
@@ -127,6 +128,7 @@ def queries(spark):
         "a10_outlier_counts", "a12_correlation", "a17_ks_statistic",
         "t_token_counts", "w_quality_rule_counts", "s_cosine_topk",
         "m_minhash_near_dups", "m_simhash_near_dups", "c_tfidf_top",
+        "d_embedding_near_dups", "j_ngram_jaccard", "c_components",
     ]
     for name in names:
         timeit(spark, name, lambda name=name: qs[name](spark, SF_DIR).collect())

@@ -4,25 +4,28 @@ embedding-cosine near-dup.
 
 Scale notes (10^12 docs):
 - exact: shuffles (hash, id) only — the text never moves.
-- minhash-LSH: signatures are computed scan-side (JVM expressions for
-  shingling + k permutation mins), then ONE explode to (band,
-  band_hash) and a groupBy — the classic shingle->minhash->band->
-  bucket-join; candidate verification compares signatures, never the
-  raw text.
+- near-dup detectors are one banded-LSH core (:func:`_lsh_pairs`)
+  behind four front-ends, each a band expression plus a verify
+  predicate.  Only (band, key, id) rows enter the bucket self-join;
+  payloads (signatures, shingle sets, vectors) are re-attached per
+  candidate pair, so verification never shuffles the corpus once per
+  band.
+- minhash-LSH: signatures are computed scan-side (JVM per-word
+  hashes + one Arrow kernel for shingling and the k permutation
+  mins); candidate verification compares signatures, never the raw
+  text.
 - simhash: per-token xxhash64 JVM-side, then 64 bit-planes as
-  segmented numpy reductions in one pandas UDF (branch-free in numpy,
+  segmented numpy reductions in one Arrow UDF (branch-free in numpy,
   painful as 64 Catalyst aggregates), then band-bucketing like LSH.
-- 'keep first' cluster resolution is single-pass: a doc is a dup if
-  any bucket pairs it with a smaller id.  (Full connected components
-  would need iteration; min-id-per-bucket is the standard one-pass
-  approximation and is exact when a cluster shares >= 1 bucket, which
-  near-identical docs do.)
+- the marking operators resolve clusters in one pass: a doc is a dup
+  if some verified pair pairs it with a smaller id.  :func:`near_dedup`
+  resolves exact clusters instead (:func:`connected_components` over
+  the verified pairs) and keeps one survivor per cluster.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
@@ -192,8 +195,8 @@ def minhash_signatures(
 
     One materialization barrier on purpose: the signature table is
     persisted so the LSH self-join doesn't recompute it per subtree
-    (the first downstream job — the hot-bucket probe — materializes
-    it; callers that skip the probe must materialize it themselves).
+    (the first downstream job — the hot-bucket probe, or
+    :func:`_lsh_pairs`' count when there is none — materializes it).
     At cluster scale the signature table is exactly what you'd write
     to storage.  r6: the shingle-hash intermediate is no longer
     persisted — the kernel now consumes the per-word hash arrays in
@@ -290,37 +293,25 @@ def minhash_signatures(
     return sig
 
 
-def _all_pairs(
-    exploded: DataFrame, bucket_keys: list[str], payload: str
-) -> DataFrame:
-    left = exploded.select(
-        *bucket_keys,
-        F.col("id").alias("id_a"),
-        F.col(payload).alias(f"{payload}_a"),
-    )
-    right = exploded.select(
-        *bucket_keys,
-        F.col("id").alias("id_b"),
-        F.col(payload).alias(f"{payload}_b"),
-    )
-    return (
-        left.join(right, bucket_keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", f"{payload}_a", f"{payload}_b")
-    )
-
-
-def _capped_bucket_pairs(
-    exploded: DataFrame,
-    bucket_keys: list[str],
+def _lsh_pairs(
+    base: DataFrame,
+    bands: F.Column,
     payload: str,
     max_bucket: int | None,
-    dedup_pairs: bool = True,
-    stats: dict | None = None,
-    payload_src: DataFrame | None = None,
+    stats: dict | None,
 ) -> DataFrame:
-    """Candidate pairs from (bucket_keys, id, payload) rows with a
-    hot-bucket guard.
+    """Candidate pairs of a banded-LSH self-join — the one bucket-pair
+    path behind every near-dup detector in this module.
+
+    ``base`` is (id, <payload>) and ``bands`` an
+    ``array<struct<band, key>>`` expression over it: two rows are
+    candidates when they share a (band, key) bucket.  Only slim
+    (band, key, id) rows enter the bucket shuffle; both payloads are
+    re-attached by id on the (far smaller) candidate table, so a wide
+    payload — a 64-long MinHash signature, an embedding vector — never
+    rides the self-join once per band (a self-join's cost is what each
+    key replicates into the shuffle).  Payloads are functionally
+    determined by id, so the output equals a join of the wide rows.
 
     Buckets up to ``max_bucket`` members do the classic all-pairs
     self-join.  Oversized buckets — millions of near-identical
@@ -332,119 +323,82 @@ def _capped_bucket_pairs(
     usual cause of hot buckets) all match the representative, but a
     pair of similar docs that BOTH differ from the representative is
     only found if they co-occur in another (small) bucket — minhash/
-    simhash get that retry from their multiple bands; single-bucket
-    schemes (hyperplane LSH) do not, so size ``max_bucket`` generously
-    there.
+    simhash get that retry from their multiple bands; single-band
+    schemes do not, so size ``max_bucket`` generously there.
 
     TWO-PHASE (VERDICT r02 item 5): a slim map-side-combined bucket
     count runs first; when NO bucket exceeds ``max_bucket`` (the common
     case) the plan is the plain self-join — none of the star machinery
-    (window/rep aggregation) is built or paid.  Only detected-hot
-    buckets route through the representative path.  The number of hot
-    buckets is reported via ``stats['hot_buckets']`` (and printed when
-    no stats dict is passed) so the silent-cap concern is visible
-    (ADVICE r02).  ``max_bucket=None`` disables the cap entirely —
-    exhaustive all-pairs per bucket.
+    is built or paid.  The number of hot buckets is reported via
+    ``stats['hot_buckets']`` (and printed when no stats dict is passed)
+    so the silent-cap concern is visible (ADVICE r02).
+    ``max_bucket=None`` disables the cap entirely — exhaustive
+    all-pairs per bucket.
 
-    Returns (id_a, id_b, <payload>_a, <payload>_b), id_a < id_b.
-    ``dedup_pairs=False`` skips the cross-bucket pair dedup — callers
-    that only need distinct dup IDs after verification avoid shuffling
-    the (possibly wide) payloads; duplicate pairs just re-verify
-    cheaply and collapse in the caller's final ``distinct``.
+    A pair that shares several buckets is returned once per bucket:
+    callers verify first and de-duplicate the slim verified ids after,
+    so no wide payload is shuffled for pair de-duplication.
 
-    ``payload_src`` (r6, guide §2.3 'shuffle keys and metadata instead
-    of payloads'): when the payload is wide (a 64-long MinHash
-    signature is ~512 B/row, exploded ``bands`` times), pass the
-    distinct (id, payload) table and the bucket self-join runs on the
-    SLIM (bucket_keys, id) rows only — candidate (id_a, id_b) pairs
-    then re-attach both payloads by joining ``payload_src`` twice on
-    the (far smaller) pair table.  Identical output: payloads are
-    functionally determined by id.  Leave None for cheap payloads
-    (simhash's single long costs less than the two re-attach joins).
+    Returns (id_a, id_b, <payload>_a, <payload>_b) with id_a < id_b.
     """
+    keys = ["band", "key"]
+    slim = base.select(F.explode(bands).alias("b"), "id").select(
+        "b.band", "b.key", "id"
+    )
     hot = None
-    if max_bucket is not None:
-        counts = exploded.groupBy(*bucket_keys).agg(
-            F.count(F.lit(1)).alias("__cnt")
+    if max_bucket is None:
+        if base.is_cached:
+            # no probe job runs, so materialise the persisted base
+            # before the self-join and the re-attach read it from
+            # several subtrees (a cold cache would be computed twice)
+            base.count()
+    else:
+        hot = (
+            slim.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("__cnt"))
+            .filter(F.col("__cnt") > max_bucket)
+            .select(*keys)
         )
-        hot = counts.filter(F.col("__cnt") > max_bucket).select(*bucket_keys)
         n_hot = hot.count()  # slim driver action; decides the plan shape
         if stats is not None:
             stats["hot_buckets"] = n_hot
-        if n_hot == 0:
-            hot = None
-        elif stats is None:
+        elif n_hot:
             print(
                 f"    hot-bucket cap engaged: {n_hot} bucket(s) above "
                 f"{max_bucket} members degrade to star comparisons"
             )
+        hot = hot if n_hot else None
 
-    def _attach(pairs_ids: DataFrame) -> DataFrame:
-        a = payload_src.select(
-            F.col("id").alias("id_a"), F.col(payload).alias(f"{payload}_a")
-        )
-        b = payload_src.select(
-            F.col("id").alias("id_b"), F.col(payload).alias(f"{payload}_b")
-        )
-        return pairs_ids.join(a, "id_a").join(b, "id_b").select(
-            "id_a", "id_b", f"{payload}_a", f"{payload}_b"
+    def all_pairs(rows: DataFrame) -> DataFrame:
+        l, r = rows.alias("l"), rows.alias("r")
+        cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        return l.join(r, cond + [F.col("l.id") < F.col("r.id")]).select(
+            F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
         )
 
     if hot is None:
-        if payload_src is not None:
-            left = exploded.select(*bucket_keys, F.col("id").alias("id_a"))
-            right = exploded.select(*bucket_keys, F.col("id").alias("id_b"))
-            pairs_ids = (
-                left.join(right, bucket_keys)
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-            )
-            if dedup_pairs:
-                pairs_ids = pairs_ids.dropDuplicates(["id_a", "id_b"])
-            return _attach(pairs_ids)
-        pairs = _all_pairs(exploded, bucket_keys, payload)
-        return pairs.dropDuplicates(["id_a", "id_b"]) if dedup_pairs else pairs
-    # hot buckets exist: split on a broadcast of the (rare) hot keys
-    marked = exploded.join(
-        F.broadcast(hot.withColumn("__hot", F.lit(True))), bucket_keys, "left"
-    )
-    small = marked.filter(F.col("__hot").isNull()).drop("__hot")
-    big = marked.filter(F.col("__hot")).drop("__hot")
-    if payload_src is not None:
-        left = small.select(*bucket_keys, F.col("id").alias("id_a"))
-        right = small.select(*bucket_keys, F.col("id").alias("id_b"))
-        pairs_small = (
-            left.join(right, bucket_keys)
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
+        pairs = all_pairs(slim)
+    else:
+        # split on a broadcast of the (rare) hot keys
+        marked = slim.join(
+            F.broadcast(hot.withColumn("__hot", F.lit(True))), keys, "left"
         )
-        reps = big.groupBy(*bucket_keys).agg(F.min("id").alias("__rep"))
-        pairs_big = (
-            big.join(reps, bucket_keys)
+        big = marked.filter(F.col("__hot")).drop("__hot")
+        reps = big.groupBy(*keys).agg(F.min("id").alias("__rep"))
+        star = (
+            big.join(reps, keys)
             .filter(F.col("id") != F.col("__rep"))
             .select(F.col("__rep").alias("id_a"), F.col("id").alias("id_b"))
         )
-        pairs_ids = pairs_small.unionByName(pairs_big)
-        if dedup_pairs:
-            pairs_ids = pairs_ids.dropDuplicates(["id_a", "id_b"])
-        return _attach(pairs_ids)
-    pairs_small = _all_pairs(small, bucket_keys, payload)
-    reps = big.groupBy(*bucket_keys).agg(
-        F.min("id").alias("__rep"),
-        F.min_by(payload, "id").alias("__rep_pay"),
-    )
-    pairs_big = (
-        big.join(reps, bucket_keys)
-        .filter(F.col("id") != F.col("__rep"))
-        .select(
-            F.col("__rep").alias("id_a"),
-            F.col("id").alias("id_b"),
-            F.col("__rep_pay").alias(f"{payload}_a"),
-            F.col(payload).alias(f"{payload}_b"),
+        cold = marked.filter(F.col("__hot").isNull()).drop("__hot")
+        pairs = all_pairs(cold).unionByName(star)
+
+    def side(s: str) -> DataFrame:
+        return base.select(
+            F.col("id").alias(f"id_{s}"), F.col(payload).alias(f"{payload}_{s}")
         )
-    )
-    pairs = pairs_small.unionByName(pairs_big)
-    return pairs.dropDuplicates(["id_a", "id_b"]) if dedup_pairs else pairs
+
+    return pairs.join(side("a"), "id_a").join(side("b"), "id_b")
 
 
 def _split_identical(base: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
@@ -467,6 +421,55 @@ def _split_identical(base: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
     return reps, ident_pairs
 
 
+def _near_dup_verdict(
+    df: DataFrame,
+    id_col: str,
+    base: DataFrame,
+    payload: str,
+    bands: F.Column,
+    verify: F.Column,
+    max_bucket: int | None,
+    collapse_identical: bool,
+    stats: dict | None,
+    h: DedupCacheHandle,
+    own: bool,
+    return_pairs: bool,
+) -> DataFrame:
+    """Shared tail of the signature near-dup markers: optional
+    identical-signature collapse, LSH candidates (:func:`_lsh_pairs`),
+    the ``verify`` predicate over ``<payload>_a``/``<payload>_b``, then
+    either the verified (id_a, id_b) table (``return_pairs``) or ``df``
+    with ``is_near_dup`` = "some verified pair has a smaller id".
+
+    ``own`` (no caller handle): materialise the small result, free the
+    O(corpus) signature caches in ``h`` NOW, and track the residue in
+    the module handle for :func:`release_dedup_caches` (r03 item 7)."""
+    if collapse_identical:
+        base, ident_pairs = _split_identical(base, payload)
+    else:
+        ident_pairs = None
+    ids = ["id_a", "id_b"] if return_pairs else ["id_b"]
+    out = _lsh_pairs(base, bands, payload, max_bucket, stats).filter(verify)
+    out = out.select(*ids)
+    if ident_pairs is not None:
+        out = out.unionByName(ident_pairs.select(*ids))
+    out = out.distinct()
+    if own:
+        out = _default_handle.track(out.persist())
+        out.count()
+        h.release()
+    if return_pairs:
+        return out
+    return df.join(
+        out.withColumn("is_near_dup", F.lit(True)),
+        df[id_col] == out["id_b"],
+        "left",
+    ).select(
+        *[df[c] for c in df.columns],
+        F.coalesce(F.col("is_near_dup"), F.lit(False)).alias("is_near_dup"),
+    )
+
+
 def minhash_lsh_duplicates(
     df: DataFrame,
     id_col: str,
@@ -487,9 +490,9 @@ def minhash_lsh_duplicates(
     Returns (id_col, is_near_dup).  A doc is a near-dup if an LSH band
     collides with a smaller-id doc AND the full-signature match
     fraction >= threshold (signature Jaccard estimate).  Buckets larger
-    than ``max_bucket`` degrade to star comparisons
-    (_capped_bucket_pairs), so no bucket ever goes quadratic —
-    including floods of byte-identical docs.  ``collapse_identical``
+    than ``max_bucket`` degrade to star comparisons (:func:`_lsh_pairs`),
+    so no bucket ever goes quadratic — including floods of
+    byte-identical docs.  ``collapse_identical``
     additionally dedups identical signatures before banding (worth one
     extra shuffle on corpora with a high exact-dup rate where exact
     dedup has NOT already run).  ``return_pairs=True`` (r5) instead
@@ -501,80 +504,28 @@ def minhash_lsh_duplicates(
     base = minhash_signatures(
         df, id_col, text_col, num_hashes, shingle_n, seed, cache=h
     )
-    if max_bucket is None:
-        # no hot-bucket probe job will run, so materialize the
-        # persisted signature table before the self-join references it
-        # from two subtrees (a cold cache would be computed twice)
-        base.count()
-    if collapse_identical:
-        reps, ident_pairs = _split_identical(base, "sig")
-    else:
-        reps, ident_pairs = base, None
-    # r6: band hash straight over the row's signature longs — the old
-    # concat_ws form built a ~40-char string per (doc, band) first;
-    # xxhash64 takes the columns directly.  Any deterministic hash of
-    # the band tuple yields the same collision-by-equality buckets.
+    # band hash straight over the row's signature longs (r6): any
+    # deterministic hash of the band tuple yields the same
+    # collision-by-equality buckets
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band"),
                 F.xxhash64(
                     *[F.col("sig")[b * rows + r] for r in range(rows)]
-                ).alias("bh"),
+                ).alias("key"),
             )
             for b in range(bands)
         ]
-    )
-    # slim explode: only (band, bh, id) enters the self-join; the
-    # 64-long signatures are re-attached per candidate pair from the
-    # persisted table (payload_src) — at realistic corpus sizes the
-    # pair table is orders of magnitude smaller than the exploded
-    # table, so the wide payload never rides the bucket shuffle
-    exploded = reps.select("id", F.explode(band_structs).alias("b")).select(
-        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-    # no pair-level dedup: only distinct id_b is needed after the
-    # verification filter (duplicate band collisions just re-verify)
-    pairs = _capped_bucket_pairs(
-        exploded, ["band", "bh"], "sig", max_bucket, dedup_pairs=False,
-        stats=stats, payload_src=reps.select("id", "sig"),
     )
     match_frac = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
         F.lit(0),
         lambda acc, x: acc + x,
     ) / F.size("sig_a")
-    confirmed = pairs.withColumn("match_frac", match_frac).filter(
-        F.col("match_frac") >= threshold
-    )
-    if return_pairs:
-        out_pairs = confirmed.select("id_a", "id_b")
-        if ident_pairs is not None:
-            out_pairs = out_pairs.unionByName(ident_pairs)
-        out_pairs = out_pairs.distinct()
-        if own:
-            out_pairs = _default_handle.track(out_pairs.persist())
-            out_pairs.count()
-            h.release()
-        return out_pairs
-    dup_ids = confirmed.select(F.col("id_b").alias("id"))
-    if ident_pairs is not None:
-        dup_ids = dup_ids.unionByName(ident_pairs.select(F.col("id_b").alias("id")))
-    dup_ids = dup_ids.distinct()
-    if own:
-        # default lifecycle: materialize the tiny dup-id table, free
-        # the O(corpus) signature cache NOW; the residue is released
-        # via release_dedup_caches() (r03 item 7)
-        dup_ids = _default_handle.track(dup_ids.persist())
-        dup_ids.count()
-        h.release()
-    return df.join(
-        dup_ids.withColumn("is_near_dup", F.lit(True)),
-        df[id_col] == dup_ids["id"],
-        "left",
-    ).select(
-        *[df[c] for c in df.columns],
-        F.coalesce(F.col("is_near_dup"), F.lit(False)).alias("is_near_dup"),
+    return _near_dup_verdict(
+        df, id_col, base, "sig", band_structs, match_frac >= threshold,
+        max_bucket, collapse_identical, stats, h, own, return_pairs,
     )
 
 
@@ -658,15 +609,11 @@ def simhash_duplicates(
     own = cache is None
     h = cache if cache is not None else DedupCacheHandle()
     base = h.track(
-        # compute the signature once, not on both join sides
+        # compute the signature once, not in every subtree that reads it
         simhash_signatures(df, id_col, text_col).persist()
     )
-    if collapse_identical:
-        reps, ident_pairs = _split_identical(base, "sh")
-    else:
-        reps, ident_pairs = base, None
     width = 64 // bands
-    band_cols = F.array(
+    band_structs = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band"),
@@ -677,40 +624,10 @@ def simhash_duplicates(
             for b in range(bands)
         ]
     )
-    exploded = reps.select("id", "sh", F.explode(band_cols).alias("b")).select(
-        "id", "sh", "b.band", "b.key"
-    )
-    pairs = _capped_bucket_pairs(
-        exploded, ["band", "key"], "sh", max_bucket, dedup_pairs=False,
-        stats=stats,
-    )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    confirmed = pairs.filter(hamming <= max_hamming)
-    if return_pairs:
-        out_pairs = confirmed.select("id_a", "id_b")
-        if ident_pairs is not None:
-            out_pairs = out_pairs.unionByName(ident_pairs)
-        out_pairs = out_pairs.distinct()
-        if own:
-            out_pairs = _default_handle.track(out_pairs.persist())
-            out_pairs.count()
-            h.release()
-        return out_pairs
-    dup_ids = confirmed.select(F.col("id_b").alias("id"))
-    if ident_pairs is not None:
-        dup_ids = dup_ids.unionByName(ident_pairs.select(F.col("id_b").alias("id")))
-    dup_ids = dup_ids.distinct()
-    if own:
-        dup_ids = _default_handle.track(dup_ids.persist())
-        dup_ids.count()
-        h.release()
-    return df.join(
-        dup_ids.withColumn("is_near_dup", F.lit(True)),
-        df[id_col] == dup_ids["id"],
-        "left",
-    ).select(
-        *[df[c] for c in df.columns],
-        F.coalesce(F.col("is_near_dup"), F.lit(False)).alias("is_near_dup"),
+    return _near_dup_verdict(
+        df, id_col, base, "sh", band_structs, hamming <= max_hamming,
+        max_bucket, collapse_identical, stats, h, own, return_pairs,
     )
 
 
@@ -744,40 +661,43 @@ def ngram_jaccard_pairs(
     inputs; it is quadratic by construction, never use it at scale."""
     own = cache is None
     h = cache if cache is not None else DedupCacheHandle()
-    sh = word_shingles(text_col, shingle_n)
-    base = h.track(
-        df.select(F.col(id_col).alias("id"), F.array_distinct(sh).alias("shingles"))
-        .filter(F.size("shingles") > 0)
-        .persist()
-    )
+    sh = F.array_distinct(word_shingles(text_col, shingle_n)).alias("shingles")
     if exhaustive:
-        ex_a = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-        ex_b = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-        out = (
-            ex_a.join(ex_b, F.col("id_a") < F.col("id_b"))
-            .withColumn("jaccard", jaccard_expr(F.col("sh_a"), F.col("sh_b")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
+        base = h.track(
+            df.select(F.col(id_col).alias("id"), sh)
+            .filter(F.size("shingles") > 0)
+            .persist()
         )
+        ex_a = base.select(
+            F.col("id").alias("id_a"), F.col("shingles").alias("shingles_a")
+        )
+        ex_b = base.select(
+            F.col("id").alias("id_b"), F.col("shingles").alias("shingles_b")
+        )
+        pairs = ex_a.join(ex_b, F.col("id_a") < F.col("id_b"))
     else:
         withsig = minhash_signatures(
             df, id_col, text_col, bucket_hashes, shingle_n, cache=h
         )
-        buckets = withsig.select(
-            "id", F.explode(F.col("sig")).alias("bh"), F.lit(0).alias("pay")
+        # docs too short for a signature have no shingles either
+        base = h.track(
+            withsig.join(df.select(F.col(id_col).alias("id"), sh), "id").persist()
         )
-        pairs = _capped_bucket_pairs(
-            buckets, ["bh"], "pay", max_bucket, stats=stats
-        ).select("id_a", "id_b")
-        a = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-        b = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-        out = (
-            pairs.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn("jaccard", jaccard_expr(F.col("sh_a"), F.col("sh_b")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
+        # one band for every hash: two docs are candidates when ANY of
+        # their permutation minima are equal, across permutations too
+        keys = F.transform(
+            "sig", lambda x: F.struct(F.lit(0).alias("band"), x.alias("key"))
         )
+        pairs = _lsh_pairs(base, keys, "shingles", max_bucket, stats)
+    out = (
+        pairs.withColumn(
+            "jaccard", jaccard_expr(F.col("shingles_a"), F.col("shingles_b"))
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+    if not exhaustive:
+        out = out.dropDuplicates(["id_a", "id_b"])
     if own:
         # default lifecycle: materialize the verified-pair table, then
         # free the O(corpus) shingle/signature caches (r03 item 7)
@@ -793,7 +713,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Resolve near-dup PAIRS into clusters: (id, component) with
     ``component`` = the smallest id reachable through the pair graph —
@@ -808,11 +727,16 @@ def connected_components(
     per round, so convergence needs O(log diameter) rounds instead of
     O(diameter) — a 10^6-long chain converges in ~20 rounds, not
     10^6.  Convergence is detected by counting label changes (one
-    action per round — the classic price of iteration on Spark), and
-    lineage is truncated with ``localCheckpoint`` every
-    ``checkpoint_every`` rounds so the plan does not grow unboundedly
-    (the standard iterative-algorithm hazard: without truncation
-    round k replays rounds 1..k-1).
+    action per round — the classic price of iteration on Spark).
+
+    Lineage never grows: the edge table is an eager
+    ``localCheckpoint`` (the rounds never replay the plan that produced
+    ``pairs``), and each round's labels are a lazy ``localCheckpoint``
+    that the round's change count materialises, so round k reads round
+    k-1's labels as a plain scan instead of replaying rounds 1..k-1.
+    The returned frame is the last round's checkpoint.  Checkpoint
+    blocks live on the executors, so losing one fails later jobs that
+    read the result instead of recomputing it.
 
     Returns only ids that appear in ``pairs`` — singleton documents
     are their own component by definition and never shuffle."""
@@ -824,68 +748,50 @@ def connected_components(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("comp", F.col("id"))
-        .persist()
     )
-    labels.count()
-    try:
-        for it in range(max_iter):
-            # neighbor labels + own label, min per vertex
-            msgs = edges.join(
-                labels.withColumnRenamed("id", "dst"), "dst"
-            ).select(F.col("src").alias("id"), "comp")
-            prop = (
-                msgs.unionByName(labels)
-                .groupBy("id")
-                .agg(F.min("comp").alias("comp"))
-            )
-            # pointer doubling: follow my label's own label (labels
-            # always point at real vertex ids, so the lookup is the
-            # same table)
-            hop = prop.select(
-                F.col("id").alias("comp"), F.col("comp").alias("comp2")
-            )
-            new_labels = prop.join(hop, "comp", "left").select(
-                "id",
-                F.coalesce(
-                    F.least("comp", "comp2"), F.col("comp")
-                ).alias("comp"),
-            )
-            if (it + 1) % checkpoint_every == 0:
-                new_labels = new_labels.localCheckpoint(eager=False)
-            new_labels = new_labels.persist()
-            changed = (
-                new_labels.join(
-                    labels.withColumnRenamed("comp", "old"), "id"
-                )
-                .filter(F.col("comp") != F.col("old"))
-                .count()
-            )
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            import warnings
+    for _ in range(max_iter):
+        # neighbor labels + own label, min per vertex
+        msgs = edges.join(
+            labels.withColumnRenamed("id", "dst"), "dst"
+        ).select(F.col("src").alias("id"), "comp")
+        prop = (
+            msgs.unionByName(labels)
+            .groupBy("id")
+            .agg(F.min("comp").alias("comp"))
+        )
+        # pointer doubling: follow my label's own label (labels
+        # always point at real vertex ids, so the lookup is the
+        # same table)
+        hop = prop.select(
+            F.col("id").alias("comp"), F.col("comp").alias("comp2")
+        )
+        new_labels = prop.join(hop, "comp", "left").select(
+            "id",
+            F.coalesce(F.least("comp", "comp2"), F.col("comp")).alias("comp"),
+        ).localCheckpoint(eager=False)
+        changed = (
+            new_labels.join(labels.withColumnRenamed("comp", "old"), "id")
+            .filter(F.col("comp") != F.col("old"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    else:
+        import warnings
 
-            warnings.warn(
-                f"connected_components: not converged after {max_iter} "
-                f"rounds ({changed} labels still moving) — components "
-                "may be split; raise max_iter"
-            )
-        # hand the result to the caller OUTSIDE our persist lifecycle
-        out = labels.select("id", "comp")
-        out = _default_handle.track(out.persist())
-        out.count()
-    finally:
-        edges.unpersist()
-        labels.unpersist()
-    return out
+        warnings.warn(
+            f"connected_components: not converged after {max_iter} "
+            f"rounds ({changed} labels still moving) — components "
+            "may be split; raise max_iter"
+        )
+    return labels
 
 
 def mark_contaminated(
@@ -1035,24 +941,15 @@ def embedding_near_duplicates(
                 hyperplane_bucket(
                     F.col("v"), planes=planes, seed=seed + 7919 * b,
                     dim=dim, df=df, vec_col=vec_col,
-                ).alias("bk"),
+                ).alias("key"),
             )
             for b in range(bands)
         ]
     )
-    exploded = base.select("id", "v", F.explode(band_structs).alias("b")).select(
-        "id", "v", F.col("b.band").alias("band"), F.col("b.bk").alias("bucket")
-    )
-    # dedup AFTER the cosine filter on the slim (id,id,cos) projection
-    # — never shuffles the embedding vectors a second time
-    pairs = (
-        _capped_bucket_pairs(
-            exploded, ["band", "bucket"], "v", max_bucket,
-            dedup_pairs=False, stats=stats,
-        )
+    return (
+        _lsh_pairs(base, band_structs, "v", max_bucket, stats)
         .withColumn("cos", cosine_expr(F.col("v_a"), F.col("v_b")))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs

@@ -80,17 +80,22 @@ def ensure_min_parallelism(
     exchange + stage (measured: a 5k-doc table LOST ~0.3-0.6 s to the
     repartition, interleaved A/B) are untouched too.  Only worth
     calling where per-row work dominates the scan; plain column
-    aggregates gain nothing."""
-    target = target or df.sparkSession.sparkContext.defaultParallelism
-    n = df.rdd.getNumPartitions()
-    if n >= target:
-        return df
+    aggregates gain nothing.
+
+    The probe reads ``.rdd`` and the private ``_jdf`` plan statistics,
+    which can fail on other Spark versions or deployments (Spark
+    Connect has neither): any failure of the probe returns ``df``
+    unchanged, since repartitioning is only ever an optimization."""
     try:
+        target = target or df.sparkSession.sparkContext.defaultParallelism
+        n = df.rdd.getNumPartitions()
+        if n >= target:
+            return df
         size = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:
-        size = None
-    if size is not None and size / max(n, 1) < min_bytes_per_partition:
+        return df
+    if size / max(n, 1) < min_bytes_per_partition:
         return df
     return df.repartition(target)

@@ -821,3 +821,122 @@ def test_decontamination_empty_eval_set(spark):
     ev = spark.createDataFrame([], "eval_id long, text string")
     got = mark_contaminated(df, ev, "doc_id").collect()
     assert [r["is_contaminated"] for r in got] == [False]
+
+
+# ---- one banded-LSH core: slim bucket shuffles, star path, clusters ----
+
+
+def _band_exchange_outputs(df):
+    """Column names output by every shuffle exchange in ``df``'s
+    physical plan that hash-partitions on ``band``."""
+    import re
+
+    found, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if node.nodeName() == "Exchange" and re.search(
+            r"hashpartitioning\(band#", node.outputPartitioning().toString()
+        ):
+            found.append(re.findall(r"(\w+)#\d+", node.output().toString()))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def _flood_corpus(spark, n_flood=120, n_cold=30):
+    """``n_flood`` near-identical docs (one unique last word each) that
+    share most LSH buckets, plus ``n_cold`` unrelated docs."""
+    pool = LANG_POOLS["en"]
+    body = " ".join(pool[i % len(pool)] for i in range(60))
+    rows = [(i, f"{body} unique{i}") for i in range(n_flood)]
+    rng = np.random.default_rng(11)
+    rows += [
+        (9000 + j, " ".join(pool[int(rng.integers(0, len(pool)))] for _ in range(60)))
+        for j in range(n_cold)
+    ]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+
+
+@pytest.mark.parametrize("front", ["minhash", "simhash", "ngram", "embedding"])
+@pytest.mark.parametrize("max_bucket", [None, 20])
+def test_lsh_bucket_shuffles_carry_ids_only(spark, front, max_bucket):
+    """Every exchange that partitions on ``band`` (the bucket self-join
+    and, with hot buckets, the star representatives) moves only
+    (band, key, id): signatures, shingle sets and vectors are
+    re-attached per candidate pair, never shuffled once per band."""
+    from pandas_dq_spark.operators.dedup import DedupCacheHandle
+
+    df = _flood_corpus(spark)
+    # at corpus scale the bucket self-join shuffles; on this tiny input
+    # it would be broadcast and show no exchange
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        with DedupCacheHandle() as h:  # no materialised residue: full plan
+            if front == "minhash":
+                out = minhash_lsh_duplicates(
+                    df, "doc_id", max_bucket=max_bucket, cache=h, return_pairs=True
+                )
+            elif front == "simhash":
+                out = simhash_duplicates(df, "doc_id", max_bucket=max_bucket, cache=h)
+            elif front == "ngram":
+                out = ngram_jaccard_pairs(df, "doc_id", max_bucket=max_bucket, cache=h)
+            else:
+                vecs = spark.createDataFrame(
+                    [(i, [1.0, 0.5, -0.25, float(i % 3)]) for i in range(150)],
+                    "vec_id long, embedding array<double>",
+                )
+                out = embedding_near_duplicates(
+                    vecs, "vec_id", planes=2, dim=4, max_bucket=max_bucket
+                )
+            outputs = _band_exchange_outputs(out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert outputs, "no band-partitioned exchange found"
+    for cols in outputs:
+        # partial aggregates add their buffers: the hot-bucket count
+        # and the star representatives' min(id)
+        assert set(cols) <= {"band", "key", "id", "count", "min"}, cols
+
+
+def test_ngram_star_path_pairs_subset_of_exhaustive(spark):
+    """A flood with a small ``max_bucket`` engages the star path in
+    ngram_jaccard_pairs; every pair it returns is a true pair (present,
+    with the same Jaccard, in the exhaustive all-pairs result)."""
+    df = _flood_corpus(spark)
+    st = {}
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(
+            df, "doc_id", threshold=0.5, max_bucket=10, stats=st
+        ).collect()
+    }
+    assert st["hot_buckets"] > 0
+    exh = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs(
+            df, "doc_id", threshold=0.5, exhaustive=True
+        ).collect()
+    }
+    assert got and set(got) <= set(exh)
+    for k, v in got.items():
+        assert exh[k] == pytest.approx(v)
+    # the flood's representative pairs with every other flood member
+    assert {(0, i) for i in range(1, 120)} <= set(got)
+
+
+def test_near_dedup_clusters_plan_is_truncated(spark):
+    """connected_components checkpoints its edges and each round's
+    labels, so the clusters frame is a plain scan: its executed plan no
+    longer carries the MinHash kernel (or any of the rounds)."""
+    from pandas_dq_spark.operators.dedup import near_dedup, release_dedup_caches
+
+    df = _near_dup_corpus(spark, n_base=20)
+    _kept, clusters = near_dedup(df, "doc_id", threshold=0.7)
+    plan = clusters._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert clusters.count() > 0
+    release_dedup_caches()

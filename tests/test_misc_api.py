@@ -263,3 +263,29 @@ def test_write_training_shards_roundtrip(spark, tmp_path):
     write_training_shards(df, out2, docs_per_shard=100, key_col="url")
     b = shard_map(out2)
     assert a == b
+
+
+def test_ensure_min_parallelism_probe_failure_returns_input():
+    """Any failing step of the partition/size probe is a no-op: the
+    input comes back unchanged instead of raising or repartitioning."""
+    from pandas_dq_spark.session import ensure_min_parallelism
+
+    class NoRdd:  # .rdd raises (e.g. no RDD API on the session)
+        @property
+        def rdd(self):
+            raise RuntimeError("RDD API unavailable")
+
+    class _OnePartition:
+        @staticmethod
+        def getNumPartitions():
+            return 1
+
+    class NoPlanStats:  # narrow input, but the private plan stats raise
+        rdd = _OnePartition()
+
+        @property
+        def _jdf(self):
+            raise AttributeError("no JVM plan")
+
+    for df in (NoRdd(), NoPlanStats()):
+        assert ensure_min_parallelism(df, target=8) is df
