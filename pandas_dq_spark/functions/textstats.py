@@ -1,7 +1,8 @@
 """Text-analysis column expressions for training-data pipelines:
-token counting, quality scoring, heuristic language-ID, document
-fingerprinting.  All pure Catalyst (array functions + regex) — no UDFs,
-so they fuse into the scan projection and stay in whole-stage codegen.
+token counting, word n-grams, quality scoring, heuristic language-ID,
+document fingerprinting.  All pure Catalyst (array functions + regex)
+— no UDFs, so they fuse into the scan projection and stay in
+whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -20,16 +21,6 @@ def tokens(text: Column) -> Column:
 
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-style subword count approximation: words + punctuation
-    runs + digit runs counted separately (a deterministic regex
-    stand-in for a real tokenizer's token count)."""
-    pieces = F.split(
-        F.trim(text), r"(?<=\p{L})(?=\p{N})|(?<=\p{N})(?=\p{L})|\s+|(?=[^\p{L}\p{N}\s])"
-    )
-    return F.size(F.filter(pieces, lambda p: p != ""))
 
 
 def mean_word_length(text: Column) -> Column:
@@ -77,8 +68,9 @@ def quality_score(text: Column, stopwords: list[str]) -> Column:
 
 def lang_guess_expr(text: Column, langs: list[str] | None = None) -> Column:
     """Pure-expression language guess: argmax of marker-word hit
-    counts per language (the no-UDF fallback of webtext.udfs.langid_udf;
-    same marker sets, so predictions agree)."""
+    counts per language (the no-UDF counterpart of the scores kernel's
+    ``lang_pred``, webtext.udfs; same marker sets and tie-break, so
+    predictions agree)."""
     langs = langs or list(LANG_MARKERS)
     w = tokens(text)
     scores = []
@@ -115,25 +107,14 @@ def fingerprint(text: Column) -> Column:
     )
 
 
-def line_hashes(text: Column) -> Column:
-    """Per-line hashes (for repeated-line / line-level dedup ops)."""
-    return F.transform(F.split(text, "\n"), lambda l: F.xxhash64(l))
-
-
-def duplicate_ngram_fraction(text: Column, n: int) -> Column:
-    """Gopher-style within-document repetition signal: the fraction of
-    word ``n``-grams that are repeats of an earlier one
-    (``1 - distinct/total``; 0.0 for docs with < ``n`` words).
-
-    Pure array expressions (the same n-gram construction as
-    dedup.word_shingles, inlined over an arbitrary column expression)
-    — the n-gram list never leaves the row, so this composes into any
-    fused projection."""
+def word_ngrams(text: Column, n: int) -> Column:
+    """Word ``n``-grams as an array<string>, each the ``n`` words joined
+    by one space; [] for docs with < ``n`` words (null text counts as
+    empty).  The one n-gram construction behind the repetition signals
+    here and dedup's shingles."""
     w = F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
     idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(-1)))
-    grams = F.when(
-        F.size(w) < n, F.array().cast("array<string>")
-    ).otherwise(
+    return F.when(F.size(w) < n, F.array().cast("array<string>")).otherwise(
         F.transform(
             idx,
             lambda i: F.concat_ws(
@@ -141,6 +122,16 @@ def duplicate_ngram_fraction(text: Column, n: int) -> Column:
             ),
         )
     )
+
+
+def duplicate_ngram_fraction(text: Column, n: int) -> Column:
+    """Gopher-style within-document repetition signal: the fraction of
+    word ``n``-grams that are repeats of an earlier one
+    (``1 - distinct/total``; 0.0 for docs with < ``n`` words).
+
+    Pure array expressions over :func:`word_ngrams` — the n-gram list
+    never leaves the row, so this composes into any fused projection."""
+    grams = word_ngrams(text, n)
     total = F.size(grams)
     return F.when(total <= 0, F.lit(0.0)).otherwise(
         1.0 - F.size(F.array_distinct(grams)) / total
@@ -156,18 +147,7 @@ def top_ngram_fraction(text: Column, n: int) -> Column:
     with a struct accumulator (prev, run, best) finds the longest run
     of equal neighbors — the mode's count — without the per-doc
     explode+groupBy a naive plan would shuffle."""
-    w = F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(-1)))
-    grams = F.when(
-        F.size(w) < n, F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        )
-    )
+    grams = word_ngrams(text, n)
     sorted_g = F.sort_array(grams)
     zero = F.struct(
         F.lit(None).cast("string").alias("prev"),

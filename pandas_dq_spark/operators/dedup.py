@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.textstats import word_ngrams
+
 # 2^31-1: keeps h*a + b < 2^62 so the permutation arithmetic cannot
 # overflow ANSI-mode 64-bit integers
 _MERSENNE = (1 << 31) - 1
@@ -162,16 +164,7 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
 # ------------------------------------------------------------- shingles
 def word_shingles(text_col: str, n: int = 3) -> F.Column:
     """Word n-gram shingles as an array<string> — pure expressions."""
-    w = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(-1)))
-    return F.when(F.size(w) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        )
-    )
+    return word_ngrams(F.col(text_col), n)
 
 
 def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -198,13 +191,14 @@ def minhash_signatures(
     (the first downstream job — the hot-bucket probe, or
     :func:`_lsh_pairs`' count when there is none — materializes it).
     At cluster scale the signature table is exactly what you'd write
-    to storage.  r6: the shingle-hash intermediate is no longer
-    persisted — the kernel now consumes the per-word hash arrays in
-    the same stage it tokenizes (the old cache write+read of the
-    O(tokens) arrays, and its extra materialization job, were pure
-    overhead once the too-short-doc filter moved AFTER the kernel:
-    with the filter on the kernel's null output, the ``wh`` expression
-    has exactly one consumer, so nothing is double-evaluated).
+    to storage.  r6: the shingle-hash intermediate is not persisted —
+    the kernel consumes the per-word hash arrays in the same stage it
+    tokenizes.  Docs with fewer than ``shingle_n`` words (the exact
+    condition under which the kernel returns a null signature) are
+    filtered out on ``size(words)`` BEFORE the kernel: a filter on the
+    kernel's own null output is pushed below the projection and makes
+    the plan evaluate the kernel twice per row (two
+    ``ArrowEvalPython`` nodes); the word-count filter leaves one.
 
     Division of labor (measured at 5k docs / 1.5M words): per-WORD
     xxhash64 stays JVM-side (~3s incl. scan); shingle combination and
@@ -283,8 +277,8 @@ def minhash_signatures(
         )
 
     sig = (
-        df.select(F.col(id_col).alias("id"), shingle_perm_mins(wh).alias("sig"))
-        .filter(F.col("sig").isNotNull())
+        df.filter(F.size(w) >= shingle_n)
+        .select(F.col(id_col).alias("id"), shingle_perm_mins(wh).alias("sig"))
         .persist()
     )
     # the persisted signature table is reclaimable: via the caller's

@@ -1,12 +1,14 @@
 """Structured Streaming wrappers (SURVEY.md §1.4/§2.9).
 
 The reference is batch-only and the north rule is batch-resumable, so
-streaming is a thin adapter: the SAME stage builders (quality_filter,
-FixDQ.transform — both pure column expressions over a DataFrame) are
-applied inside ``foreachBatch`` or directly on a streaming DataFrame
-(stats/rules/scrub are stateless projections, so they stream as-is;
-only the exact-dedup mark, which needs a global shuffle, is replaced
-by ``dropDuplicatesWithinWatermark`` in streaming mode).
+streaming is a thin adapter.  ``quality_filter_foreach_batch`` runs
+the batch ``quality_filter`` inside ``foreachBatch``;
+``streaming_quality_filter`` applies the batch pipeline's own scores
+and verdict builders (``webtext.pipeline._with_scores`` /
+``_with_verdict``) directly to a streaming DataFrame — they are
+stateless projections, so they stream as-is.  Only the exact-dedup
+mark, which needs a global shuffle, is replaced by
+``dropDuplicatesWithinWatermark``; ``is_dup`` is always False there.
 
 Output-schema changelog (ADVICE r03): round 3 widened the per-doc UDF
 struct, so ``streaming_quality_filter`` output gained four columns —
@@ -18,7 +20,11 @@ test_streaming_restart_fresh_vs_stale_sink): the file sink accepts
 the widened rows, leaving a mixed-schema sink where plain reads
 resolve only one schema and pre-upgrade rows lack the new columns
 even under ``mergeSchema``.  Restart into a FRESH sink (or one with
-real schema evolution, e.g. Iceberg) after upgrading.  Note also that
+real schema evolution, e.g. Iceberg) after upgrading.  The same holds
+for the second widening: once the verdict builder was shared with the
+batch pipeline, ``streaming_quality_filter`` output gained
+``dq_issue``, ``pii_hits`` and ``bucket``, so it carries the columns
+of ``quality_filter(..., check_extraction=False)``.  Note also that
 the stateful dedup's checkpointed WATERMARK carries across restarts:
 a resumed query drops newly-arrived batches whose event times fall
 behind it, independent of any schema change.
@@ -29,10 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..webtext.heuristics import QualityConfig, rule_exprs
-from ..webtext.pipeline import ISSUE_TYPE, _drop_reserved
-from ..webtext.scrub import scrub_col
-from ..webtext.udfs import TEXT_SCORES_FIELDS, make_text_scores_udf
+from ..webtext.heuristics import QualityConfig
+from ..webtext.pipeline import _drop_reserved, _with_scores, _with_verdict
 
 
 def streaming_quality_filter(
@@ -42,9 +46,11 @@ def streaming_quality_filter(
     ts_col: str = "warc_ts",
     dedup: bool = True,
 ) -> DataFrame:
-    """Stateless rule/scrub stages applied to a streaming DataFrame;
-    exact dedup becomes watermark-scoped dedup on the text hash (the
-    streaming-legal analogue of the batch global dedup).  ``dedup=
+    """The batch pipeline's scores and verdict applied to a streaming
+    DataFrame — the same columns as ``quality_filter(...,
+    check_extraction=False)``.  Exact dedup becomes watermark-scoped
+    dedup on the text hash (the streaming-legal analogue of the batch
+    global dedup).  ``dedup=
     False`` keeps every row (``is_dup`` stays False) — used when the
     consumer chains its own stateful operator (e.g. the windowed
     metrics aggregation) and wants a single stateful stage.
@@ -54,16 +60,7 @@ def streaming_quality_filter(
     are dropped at entry, same as the batch pipeline."""
     cfg = cfg or QualityConfig()
     out = _drop_reserved(stream_df).withWatermark(ts_col, watermark)
-    # same fused Arrow pass as the batch pipeline (stats incl. char/
-    # line level come out of the one UDF struct)
-    scores_udf = make_text_scores_udf(cfg.stopwords)
-    out = out.withColumn("__ts", scores_udf(F.col("text")))
-    # one select for all struct fields (one analysis pass, not one
-    # per field — same fusion as the batch pipeline, r4)
-    out = out.select(
-        *[c for c in out.columns if c != "__ts"],
-        *[F.col(f"__ts.{fld}").alias(fld) for fld in TEXT_SCORES_FIELDS],
-    )
+    out = _with_scores(out, cfg)
     if dedup:
         out = out.withColumn(
             "__text_hash", F.sha2(F.coalesce(F.col("text"), F.lit("")), 256)
@@ -71,25 +68,7 @@ def streaming_quality_filter(
         out = out.dropDuplicatesWithinWatermark(["__text_hash"]).drop(
             "__text_hash"
         )
-    out = out.withColumn("is_dup", F.lit(False))
-    issue_structs = [
-        F.when(
-            pred,
-            F.struct(
-                F.lit(name).alias("check"),
-                F.lit("drop").alias("severity"),
-                F.lit(detail).alias("detail"),
-            ),
-        )
-        for name, pred, detail in rule_exprs(cfg)
-    ]
-    out = out.withColumn(
-        "issues",
-        F.filter(F.array(*issue_structs), lambda x: x.isNotNull()).cast(ISSUE_TYPE),
-    )
-    out = out.withColumn("keep", F.size("issues") == 0)
-    out = out.withColumn("scrubbed_text", scrub_col(F.col("text")))
-    return out
+    return _with_verdict(out.withColumn("is_dup", F.lit(False)), cfg)
 
 
 def streaming_metrics_windowed(
@@ -113,10 +92,8 @@ def streaming_metrics_windowed(
     scored = streaming_quality_filter(
         stream_df, cfg, watermark=watermark, ts_col=ts_col, dedup=False
     )
-    bucket = F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int")
     return (
-        scored.withColumn("bucket", bucket)
-        .groupBy(F.window(F.col(ts_col), window_dur).alias("w"), "bucket")
+        scored.groupBy(F.window(F.col(ts_col), window_dur).alias("w"), "bucket")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum(F.col("keep").cast("long")).alias("n_kept"),

@@ -1,18 +1,20 @@
-"""Gopher/C4-style heuristic statistics as pure Catalyst expressions
-(SURVEY.md §2.8 'WT tokenish stats') — the Spark analogue of
-pandas_dq's missing-value / outlier / high-cardinality / duplicate
-checks, per the north rule.
+"""Gopher/C4-style quality rules (SURVEY.md §2.8 'WT tokenish stats')
+— the Spark analogue of pandas_dq's missing-value / outlier /
+high-cardinality / duplicate checks, per the north rule.
 
-Everything here is array functions + regex on the JVM: no UDFs, stays
-inside whole-stage codegen, and Catalyst prunes the parquet scan to
-(url, text) when only these stats are selected.
+:class:`QualityConfig` holds the thresholds and :func:`rule_exprs`
+the keep/drop predicates.  The predicates read the per-document stats
+columns that the one Arrow scores pass (webtext.udfs) produces, plus
+``is_dup`` (the opt-in n-gram repetition rule reads the raw text
+through array expressions); no rule is a UDF, so every rule fuses into
+one projection inside whole-stage codegen.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .lm import EN_STOPWORDS
@@ -43,61 +45,6 @@ class QualityConfig:
     # unless explicitly configured
     max_dup_ngram_frac: float | None = None
     dup_ngram_n: int = 3
-
-
-_WS = r"\s+"
-
-
-def words_col(text: Column) -> Column:
-    """Whitespace tokens, [] for empty/blank docs (python
-    str.split() semantics)."""
-    return F.when(
-        F.trim(text) == "", F.array().cast("array<string>")
-    ).otherwise(F.split(F.trim(text), _WS))
-
-
-def add_stats(df: DataFrame, cfg: QualityConfig, text_col: str = "text") -> DataFrame:
-    """Char- and line-level statistics as Catalyst expressions —
-    the STANDALONE variant for callers that want these stats without
-    the fused Arrow pass.
-
-    The pipeline itself (webtext.pipeline.quality_filter and the
-    streaming adapter) computes the same statistics inside the single
-    Arrow UDF pass (webtext.udfs) so the text is scanned exactly once
-    for every per-document number; measured at 1M docs the expression
-    versions of the token stats cost 66s (CollapseProject re-inlines
-    split() into every consumer and array_contains linear-scans the
-    stopword list per token) vs ~1s inside the pass already being paid
-    for langid.  One semantic nuance: this variant counts symbols with
-    the Java regex classes \\p{L}\\p{N}\\s while the kernel uses python
-    isalnum()/isspace() (the reference-label semantics); the classes
-    agree on all fixture text and differ only on exotica like
-    \\u00a0 (java \\s is ASCII-only)."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    lines = F.split(t, "\n")
-    n_lines = F.size(lines)
-    # regexp_count of the complement class == length of the stripped
-    # copy the old regexp_replace built, without allocating that copy
-    n_symbols = F.regexp_count(t, F.lit(r"[^\p{L}\p{N}\s]"))
-    # '...$' on split('\n') output is exactly endswith (lines carry no
-    # newline); endswith is a memcmp, the per-line regex was not
-    n_ellipsis_lines = F.size(F.filter(lines, lambda l: l.endswith("...")))
-    n_distinct_lines = F.size(F.array_distinct(lines))
-
-    # one select = one analysis pass (vs one per withColumn, r4)
-    return df.select(
-        "*",
-        F.length(t).alias("n_chars"),
-        F.when(F.length(t) > 0, n_symbols / F.length(t))
-        .otherwise(F.lit(0.0))
-        .alias("symbol_ratio"),
-        F.when(n_lines > 0, 1.0 - n_distinct_lines / n_lines)
-        .otherwise(F.lit(0.0))
-        .alias("repeated_line_frac"),
-        F.when(n_lines > 0, n_ellipsis_lines / n_lines)
-        .otherwise(F.lit(0.0))
-        .alias("ellipsis_line_frac"),
-    )
 
 
 # rule -> (predicate builder over the stats columns, severity, detail)

@@ -3,9 +3,13 @@ over Common-Crawl-style pages (BASELINE.json north_rule).
 
 Stage order (mirrors pandas_dq's check->fix lifecycle, SURVEY.md §3):
 
-  extract(html) -> stats (Catalyst) -> langid/ppl (pandas UDFs)
+  extract(html) -> scores (one Arrow UDF pass: langid, ppl, stats)
   -> exact dedup mark (one shuffle on sha2(text)) -> rules -> issues
   + keep -> scrub -> bucket partitioning -> write + sidecar + manifest
+
+The scores pass and the verdict columns (issues .. bucket) are built
+by :func:`_with_scores` and :func:`_with_verdict`, which the streaming
+adapter shares.
 
 Scale design notes (100 TB / 10^12 docs):
 - The only wide operation is the dedup shuffle, and it shuffles ONLY
@@ -13,9 +17,9 @@ Scale design notes (100 TB / 10^12 docs):
   joins back on url (AQE picks a sort-merge join co-partitioned with
   the main table's url-hash bucketing; at 10^12 rows this is the
   textbook two-pass dedup).
-- Everything else is a narrow map: stats/rules/scrub are one fused
-  projection inside whole-stage codegen; langid+ppl are two Arrow
-  batches per partition.
+- Everything else is a narrow map: rules/scrub are one fused
+  projection inside whole-stage codegen; the scores are one Arrow pass
+  per partition.
 - Output is hash-bucketed by url (``pmod(xxhash64(url), n_buckets)``)
   — deterministic placement enables per-bucket checkpoint/resume and
   dynamic partition-overwrite idempotency.
@@ -29,7 +33,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .heuristics import QualityConfig, rule_exprs
@@ -188,10 +192,73 @@ def mark_duplicates(
     ).drop("__is_dup")
 
 
+def bucket_col(cfg: QualityConfig) -> Column:
+    """The output partition id: ``pmod(xxhash64(url), n_buckets)`` —
+    deterministic placement for per-bucket checkpoint/resume."""
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int")
+
+
+def _with_scores(df: DataFrame, cfg: QualityConfig, row_counter=None) -> DataFrame:
+    """ONE Arrow pass: langid + perplexity + token/char/line stats —
+    the text is read exactly once for every per-document statistic."""
+    scores_udf = make_text_scores_udf(cfg.stopwords, row_counter=row_counter)
+    out = df.withColumn("__ts", scores_udf(F.col("text")))
+    # ONE select for all struct fields: a per-field withColumn chain
+    # costs one full analysis pass per field (~35% of small-run wall
+    # was driver-side plan construction, measured r4)
+    return out.select(
+        *[c for c in out.columns if c != "__ts"],
+        *[F.col(f"__ts.{fld}").alias(fld) for fld in TEXT_SCORES_FIELDS],
+    )
+
+
+def _with_verdict(df: DataFrame, cfg: QualityConfig) -> DataFrame:
+    """The per-document verdict over the scores and ``is_dup``:
+    issues, dq_issue, keep, scrubbed_text, pii_hits and (unless the
+    input already carries one) bucket.  Batch and streaming both build
+    their output here."""
+    issue_structs = [
+        F.when(
+            pred,
+            F.struct(
+                F.lit(name).alias("check"),
+                F.lit("drop").alias("severity"),
+                F.lit(detail).alias("detail"),
+            ),
+        )
+        for name, pred, detail in rule_exprs(cfg)
+    ]
+    issues = F.filter(
+        F.array(*issue_structs), lambda x: x.isNotNull()
+    ).cast(ISSUE_TYPE)
+    out = df.select("*", issues.alias("issues"))
+    # dq_issue mirrors the reference's comma-joined DQ Issue string
+    # (pandas_dq.py:308-310), "No issue" fill included (517);
+    # keep + dq_issue fused into one analysis pass
+    out = out.select(
+        "*",
+        F.when(F.size("issues") == 0, F.lit("No issue"))
+        .otherwise(
+            F.array_join(F.transform(F.col("issues"), lambda x: x["detail"]), ", ")
+        )
+        .alias("dq_issue"),
+        (F.size("issues") == 0).alias("keep"),
+    )
+    out = out.withColumn("scrubbed_text", scrub_col(F.col("text")))
+    # referencing scrubbed_text lets clean docs (text == scrubbed)
+    # skip the per-rule rlike scans; subexpression elimination
+    # shares the scrub chain between the two columns
+    out = out.withColumn(
+        "pii_hits", pii_hit_count(F.col("text"), F.col("scrubbed_text"))
+    )
+    if "bucket" not in out.columns:
+        out = out.withColumn("bucket", bucket_col(cfg))
+    return out
+
+
 def quality_filter(
     df: DataFrame,
     cfg: QualityConfig | None = None,
-    scrub: bool = True,
     check_extraction: bool = True,
     dup_verdict: DataFrame | None = None,
     udf_row_counter=None,
@@ -199,7 +266,7 @@ def quality_filter(
 ) -> DataFrame:
     """Full pipeline: returns the input columns plus stats, lang_pred/
     lang_score, ppl, is_dup, issues, dq_issue, keep, scrubbed_text,
-    bucket.
+    pii_hits, bucket.
 
     If ``df`` already carries a ``bucket`` column (run_pipeline adds it
     at scan time so per-batch bucket filters prune BEFORE the Arrow UDF
@@ -225,61 +292,9 @@ def quality_filter(
         out = out.withColumn(
             "extract_ok", F.coalesce(F.col("extracted_text") == F.col("text"), F.lit(False))
         )
-    # ONE Arrow pass: langid + perplexity + token/char/line stats —
-    # the text is read exactly once for every per-document statistic
-    # (heuristics.add_stats remains as the standalone Catalyst variant)
-    scores_udf = make_text_scores_udf(cfg.stopwords, row_counter=udf_row_counter)
-    out = out.withColumn("__ts", scores_udf(F.col("text")))
-    # ONE select for all struct fields: a per-field withColumn chain
-    # costs one full analysis pass per field (~35% of small-run wall
-    # was driver-side plan construction, measured r4)
-    out = out.select(
-        *[c for c in out.columns if c != "__ts"],
-        *[F.col(f"__ts.{fld}").alias(fld) for fld in TEXT_SCORES_FIELDS],
-    )
+    out = _with_scores(out, cfg, udf_row_counter)
     out = mark_duplicates(out, verdict=dup_verdict, flood_safe=flood_safe)
-
-    rules = rule_exprs(cfg)
-    issue_structs = [
-        F.when(
-            pred,
-            F.struct(
-                F.lit(name).alias("check"),
-                F.lit("drop").alias("severity"),
-                F.lit(detail).alias("detail"),
-            ),
-        )
-        for name, pred, detail in rules
-    ]
-    issues = F.filter(
-        F.array(*issue_structs), lambda x: x.isNotNull()
-    ).cast(ISSUE_TYPE)
-    out = out.select("*", issues.alias("issues"))
-    # dq_issue mirrors the reference's comma-joined DQ Issue string
-    # (pandas_dq.py:308-310), "No issue" fill included (517);
-    # keep + dq_issue fused into one analysis pass
-    out = out.select(
-        "*",
-        F.when(F.size("issues") == 0, F.lit("No issue"))
-        .otherwise(
-            F.array_join(F.transform(F.col("issues"), lambda x: x["detail"]), ", ")
-        )
-        .alias("dq_issue"),
-        (F.size("issues") == 0).alias("keep"),
-    )
-    if scrub:
-        out = out.withColumn("scrubbed_text", scrub_col(F.col("text")))
-        # referencing scrubbed_text lets clean docs (text == scrubbed)
-        # skip the per-rule rlike scans; subexpression elimination
-        # shares the scrub chain between the two columns
-        out = out.withColumn(
-            "pii_hits", pii_hit_count(F.col("text"), F.col("scrubbed_text"))
-        )
-    if "bucket" not in out.columns:
-        out = out.withColumn(
-            "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int")
-        )
-    return out
+    return _with_verdict(out, cfg)
 
 
 def prepare_bucketed_input(
@@ -296,9 +311,7 @@ def prepare_bucketed_input(
     ``spark.read.parquet(path)`` and passed straight to run_pipeline
     (which keeps the existing ``bucket`` partition column)."""
     cfg = cfg or QualityConfig()
-    out = df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int")
-    )
+    out = df.withColumn("bucket", bucket_col(cfg))
     out.write.mode("overwrite").partitionBy("bucket").parquet(path)
     return path
 
@@ -443,10 +456,7 @@ def run_pipeline(
     spark = df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     if "bucket" not in df.columns:
-        df = df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int"),
-        )
+        df = df.withColumn("bucket", bucket_col(cfg))
 
     done = completed_buckets(out_dir) if resume else set()
     all_buckets = list(range(cfg.n_buckets))

@@ -22,7 +22,15 @@ SCRUB_RULES: list[tuple[str, str, str]] = [
     ("ssn", r"\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b", "<SSN>"),
     (
         "phone",
-        r"\b(\+?1[-. ])?(\([0-9]{3}\)|[0-9]{3})[-. ][0-9]{3}[-. ][0-9]{4}\b",
+        # a match may also start at '(' or '+' when no word character
+        # precedes it, where a leading \b cannot match: 'call (555)
+        # 123-4567' and 'call +1 555-123-4567' scrub whole.  The first
+        # lookahead names every character a match can start with; it
+        # changes no match, but lets the Java regex reject the other
+        # start positions before the \b and lookbehind tests (without
+        # it the pattern ran ~1.7x slower on crawl text)
+        r"(?=[0-9(+])(?:\b|(?<![0-9A-Za-z_])(?=[(+]))"
+        r"(\+?1[-. ])?(\([0-9]{3}\)|[0-9]{3})[-. ][0-9]{3}[-. ][0-9]{4}\b",
         "<PHONE>",
     ),
     ("ip", r"\b([0-9]{1,3}\.){3}[0-9]{1,3}\b", "<IP>"),

@@ -1,32 +1,34 @@
-"""Vectorized Arrow-native UDFs: language-ID + perplexity (the
-fastText / KenLM stand-ins, BASELINE.json north_star).
+"""The vectorized Arrow-native text-scores UDF: language-ID +
+perplexity (the fastText / KenLM stand-ins, BASELINE.json north_star)
++ token/char/line stats, in one pass.
 
-These are the ONLY Python-on-executor stages in the whole pipeline
+This is the ONLY Python-on-executor stage in the whole pipeline
 (input_hint: 'vectorized pandas/Arrow UDFs (no per-row Python)').
 The model tables are module-level constants shipped once per worker
 via the closure, not per row.
 
-Two kernels produce the fused per-document scores:
+One UDF produces the fused per-document scores: an ARROW-NATIVE
+scalar UDF (``F.arrow_udf``, Spark 4.1, built by
+:func:`make_text_scores_udf`).  The batch arrives as a
+``pyarrow.Array`` and the result leaves as a ``pyarrow.StructArray``
+— no pandas object-Series materialization on either side (r6: the
+pandas_udf wrapper used to allocate one Python str per document on
+entry and convert the whole frame back to Arrow on exit; guide §4.1
+'how efficiently they cross').  Tokenization stays in Arrow C++
+(``utf8_split_whitespace`` + ``dictionary_encode``), so Python never
+materializes the per-token objects — only the batch's (small) token
+dictionary.  Per-unique-word properties are cached across batches AND
+across tasks (module-level cache keyed by the stopword set, guide
+§4.5: functions imported from a shipped module keep their globals in
+a reused worker); per-document sums are segmented numpy reductions;
+the bigram log-probs come from one dense-matrix gather (lm.LM_FLAT).
+Measured at 40k docs / 6.2M tokens the vectorized kernel is ~5x the
+loop kernel.
 
-- ``impl="arrow"`` (default): an ARROW-NATIVE scalar UDF
-  (``F.arrow_udf``, Spark 4.1): the batch arrives as a
-  ``pyarrow.Array`` and the result leaves as a ``pyarrow.StructArray``
-  — no pandas object-Series materialization on either side (r6: the
-  pandas_udf wrapper used to allocate one Python str per document on
-  entry and convert the whole frame back to Arrow on exit;
-  guide §4.1 'how efficiently they cross').  Tokenization stays in
-  Arrow C++ (``utf8_split_whitespace`` + ``dictionary_encode``), so
-  Python never materializes the per-token objects — only the batch's
-  (small) token dictionary.  Per-unique-word properties are cached
-  across batches AND across tasks (module-level cache keyed by the
-  stopword set, guide §4.5: functions imported from a shipped module
-  keep their globals in a reused worker); per-document sums are
-  segmented numpy reductions; the bigram log-probs come from one
-  dense-matrix gather (lm.LM_FLAT).  Measured at 40k docs / 6.2M
-  tokens the vectorized kernel is ~5x the loop kernel.
-- ``impl="loop"``: the straightforward per-token python loop, kept as
-  the executable specification the vectorized kernel is parity-tested
-  against (tests/test_webtext_pipeline.py).
+:func:`loop_scores_frame`, the straightforward per-token python loop,
+is the executable specification the vectorized kernel is
+parity-tested against (tests/test_udf_kernels.py); it runs on the
+driver only.
 
 Exactness: every output field is bit-identical between the two kernels
 EXCEPT ``ppl``, whose per-document log-prob sum uses numpy pairwise
@@ -68,36 +70,10 @@ from .lm import (
     MARKER_ID,
     NEXT_COL,
     _LANG_ORDER,
-    langid_scores,
-    perplexity,
 )
 
 _LANG_ARR = np.array(_LANG_ORDER, dtype=object)
 _NLANG = len(_LANG_ORDER)
-
-_LANGID_SCHEMA = T.StructType(
-    [
-        T.StructField("lang_pred", T.StringType()),
-        T.StructField("lang_score", T.DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(_LANGID_SCHEMA)
-def langid_udf(texts: pd.Series) -> pd.DataFrame:
-    preds, scores = [], []
-    for t in texts:
-        tokens = (t or "").split()
-        lang, score = langid_scores(tokens)
-        preds.append(lang)
-        scores.append(score)
-    return pd.DataFrame({"lang_pred": preds, "lang_score": scores})
-
-
-@F.pandas_udf(T.DoubleType())
-def perplexity_udf(texts: pd.Series) -> pd.Series:
-    return pd.Series([perplexity((t or "").split()) for t in texts])
-
 
 # ---- fused token-stats + scores kernel (the pipeline's hot path) -----
 #
@@ -353,9 +329,7 @@ def arrow_scores_frame(
     )
 
 
-def loop_scores_frame(
-    texts: pd.Series, stop_set: frozenset, cache: dict | None = None
-) -> pd.DataFrame:
+def loop_scores_frame(texts: pd.Series, stop_set: frozenset) -> pd.DataFrame:
     """The per-token python loop: the executable spec for
     arrow_scores_struct (bit-identical to lm.langid_scores /
     lm.perplexity), with a per-word property memo.
@@ -365,7 +339,7 @@ def loop_scores_frame(
     lines, str.endswith) — the parity test against the vectorized
     kernel is what proves the kernel's token-partition reformulation
     of symbol counting correct."""
-    cache = cache if cache is not None else {}
+    cache: dict[str, tuple] = {}
     _props = make_word_props(stop_set)
     out = {f.name: [] for f in TEXT_SCORES_SCHEMA.fields}
     memo_get = cache.get
@@ -433,35 +407,21 @@ def loop_scores_frame(
     return pd.DataFrame(out)
 
 
-def make_text_scores_udf(stopwords: tuple, row_counter=None, impl: str = "arrow"):
-    """``row_counter`` (an optional Spark accumulator) counts rows the
+def make_text_scores_udf(stopwords: tuple, row_counter=None):
+    """The ARROW-NATIVE scalar scores UDF (``F.arrow_udf``): batches
+    stay ``pyarrow`` end-to-end, skipping the pandas object-Series
+    round-trip the old pandas_udf wrapper paid on both sides of the
+    boundary (r6, guide §4).
+
+    ``row_counter`` (an optional Spark accumulator) counts rows the
     UDF actually processes — the pipeline tests use it to assert the
-    Arrow pass runs exactly ONCE per row per run (no double compute).
-
-    ``impl``: "arrow" (default) is an ARROW-NATIVE scalar UDF
-    (``F.arrow_udf``): batches stay ``pyarrow`` end-to-end, skipping
-    the pandas object-Series round-trip the old pandas_udf wrapper
-    paid on both sides of the boundary (r6, guide §4).  "loop" is the
-    executable spec (same numbers, ~5x slower), still a pandas_udf."""
+    Arrow pass runs exactly ONCE per row per run (no double compute)."""
     stop_set = frozenset(stopwords)
-    if impl == "arrow":
 
-        @F.arrow_udf(TEXT_SCORES_SCHEMA)
-        def text_scores_arrow_udf(texts: pa.Array) -> pa.Array:
-            if row_counter is not None:
-                row_counter.add(len(texts))
-            return arrow_scores_struct(texts, stop_set)
-
-        return text_scores_arrow_udf
-
-    # per-worker persistent word-property cache (web text repeats words
-    # heavily, so per-batch unique counts stay small once warm)
-    cache: dict[str, tuple] = {}
-
-    @F.pandas_udf(TEXT_SCORES_SCHEMA)
-    def text_scores_udf(texts: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(TEXT_SCORES_SCHEMA)
+    def text_scores_arrow_udf(texts: pa.Array) -> pa.Array:
         if row_counter is not None:
             row_counter.add(len(texts))
-        return loop_scores_frame(texts, stop_set, cache)
+        return arrow_scores_struct(texts, stop_set)
 
-    return text_scores_udf
+    return text_scores_arrow_udf

@@ -36,7 +36,7 @@ import pyspark.sql.functions as F
 from pandas_dq_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 ROUNDS = int(os.environ.get("FLAGSHIP_ROUNDS", "5"))
 REPLICAS = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICAS", "400"))
 # comma-separated list of commits to race against the working tree;

@@ -628,6 +628,25 @@ def test_explicit_handle_keeps_then_releases(spark):
     assert h._tracked == []
 
 
+def test_minhash_kernel_runs_once_per_row(spark):
+    # too-short docs are dropped on their word count BELOW the kernel;
+    # a filter on the kernel's null output would be pushed below the
+    # projection and evaluate the kernel a second time per row
+    from pandas_dq_spark.operators.dedup import DedupCacheHandle, minhash_signatures
+
+    df = spark.createDataFrame(
+        [(0, None), (1, ""), (2, "two words"), (3, "one two three four")],
+        "doc_id long, text string",
+    )
+    with DedupCacheHandle() as h:
+        sig = minhash_signatures(df, "doc_id", cache=h)
+        plan = sig._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+        rows = sig.collect()
+    assert [r["id"] for r in rows] == [3]
+    assert len(rows[0]["sig"]) == 64
+
+
 def test_embedding_multiband_recovers_pair_in_hot_bucket(spark):
     """r5 (VERDICT r04 item 4): a similar pair buried in an OVERSIZED
     band-0 bucket — both members differing from the star

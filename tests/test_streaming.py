@@ -42,6 +42,42 @@ def test_streaming_quality_filter(spark, tmp_path):
     assert any(r["keep"] for r in rows)
 
 
+def test_streaming_output_matches_batch(spark, tmp_path):
+    """The streaming adapter builds the batch verdict: with dedup=False
+    it carries the columns of quality_filter(..., check_extraction=
+    False), and every row the batch run does not mark as a duplicate
+    is equal on every column."""
+    from pandas_dq_spark.webtext.pipeline import quality_filter
+
+    src, pdf = _write_pages(spark, tmp_path)
+    cfg = QualityConfig(min_words=20)
+    batch = quality_filter(
+        spark.createDataFrame(pdf, schema=PAGES_SCHEMA), cfg, check_extraction=False
+    )
+    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
+    out = streaming_quality_filter(stream, cfg, dedup=False)
+
+    def typed(df):
+        return {(f.name, f.dataType.simpleString()) for f in df.schema.fields}
+
+    assert typed(out) == typed(batch)
+    cols = batch.columns
+    q = (
+        out.select(*cols)
+        .writeStream.format("memory")
+        .queryName("wt_contract")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt_contract"))
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {r["url"]: r for r in spark.sql("select * from wt_contract").collect()}
+    exp = batch.filter(~F.col("is_dup")).select(*cols).collect()
+    assert len(got) == len(pdf) and 0 < len(exp) < len(pdf)
+    for r in exp:
+        assert got[r["url"]] == r, r["url"]
+
+
 def test_stateful_host_counts(spark, tmp_path):
     # applyInPandasWithState: running per-host counts must accumulate
     # across micro-batches (maxFilesPerTrigger=1 forces >=2 batches)

@@ -122,30 +122,6 @@ def test_persistent_cache_reused_across_batches():
     assert out["n_words"].tolist() == [4, 3]
 
 
-def test_standalone_add_stats_matches_kernel(spark):
-    # heuristics.add_stats is the standalone Catalyst variant of the
-    # stats the kernel computes; no production path calls it anymore,
-    # so pin it here against the kernel on fixture text (where the
-    # Java \p{L}\p{N}\s and python isalnum/isspace classes agree)
-    from pandas_dq_spark.webtext.fixtures import pages_df
-    from pandas_dq_spark.webtext.heuristics import QualityConfig, add_stats
-
-    sdf = pages_df(spark, 300).select("url", "text")
-    cat = (
-        add_stats(sdf, QualityConfig())
-        .select("url", "n_chars", "symbol_ratio", "repeated_line_frac", "ellipsis_line_frac")
-        .toPandas()
-        .set_index("url")
-        .sort_index()
-    )
-    pdf = sdf.toPandas().set_index("url").sort_index()
-    ker = arrow_scores_frame(pdf["text"], STOP).set_index(pdf.index)
-    for c in ("n_chars", "symbol_ratio", "repeated_line_frac", "ellipsis_line_frac"):
-        assert (
-            cat[c].to_numpy() == ker[c].to_numpy().astype(cat[c].dtype)
-        ).all(), c
-
-
 @settings(max_examples=150, deadline=None)
 @given(
     st.lists(

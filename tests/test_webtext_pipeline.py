@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -83,7 +84,7 @@ def test_scrub_gates_are_necessary_conditions(spark):
     # chain on inputs engineered to sit just inside/outside each
     # gate's boundary (digit runs next to every separator class,
     # near-miss phone/ssn/ip shapes, tags adjacent to digits)
-    from pandas_dq_spark.webtext.scrub import SCRUB_RULES, scrub_col
+    from pandas_dq_spark.webtext.scrub import SCRUB_RULES, scrub_col, scrub_py
 
     cases = [
         "999) 123-4567 x", "123-45-6789", "12-345-6789", "1234-56-7890",
@@ -95,15 +96,38 @@ def test_scrub_gates_are_necessary_conditions(spark):
         "frakking 555-123-4567", "rep123", "rep123.", "rep123-",
         "(123)456-789-0123", "no digits here.", "", "   ", "1",
     ]
+    # seeded fuzz over the characters the numeric rules and their gates
+    # turn on, '(' and '+' included (a phone match may start at either)
+    rng = np.random.default_rng(9)
+    alphabet = np.array(list("0123456789 -.()+@ax"))
+    cases += [
+        "".join(rng.choice(alphabet, int(rng.integers(0, 25))))
+        for _ in range(3000)
+    ]
     df = spark.createDataFrame([(c,) for c in cases], "text string")
     ungated = F.col("text")
     for _, pat, repl in SCRUB_RULES:
         ungated = F.regexp_replace(ungated, pat, repl)
     rows = df.select(
-        scrub_col(F.col("text")).alias("gated"), ungated.alias("plain")
+        "text", scrub_col(F.col("text")).alias("gated"), ungated.alias("plain")
     ).collect()
+    assert len(rows) == len(cases)
     for r in rows:
-        assert r["gated"] == r["plain"]
+        assert r["gated"] == r["plain"], r["text"]
+        # and the Java chain equals the Python one (scrub_py)
+        assert r["gated"] == scrub_py(r["text"]), r["text"]
+
+
+def test_phone_rule_scrubs_parenthesized_and_plus_forms(spark):
+    # a leading \b cannot match before '(' or '+' after a space, so
+    # these forms used to survive (or scrub to 'call +<PHONE> now')
+    from pandas_dq_spark.webtext.scrub import scrub_col, scrub_py
+
+    cases = ["call (555) 123-4567 now", "call +1 555-123-4567 now"]
+    df = spark.createDataFrame([(c,) for c in cases], "text string")
+    got = [r[0] for r in df.select(scrub_col(F.col("text"))).collect()]
+    assert got == ["call <PHONE> now"] * 2
+    assert [scrub_py(c) for c in cases] == ["call <PHONE> now"] * 2
 
 
 def test_duplicate_survivor_is_min_url(result):
